@@ -71,7 +71,10 @@ def bench_images_pipeline(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # default to the CPUs this process may use: a fixed local[32] on a
+    # smaller host measures oversubscription, not the engine
+    nproc = len(os.sched_getaffinity(0))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", nproc))
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
 
     from ordinarydumpdeduplicator_spark.session import get_spark
@@ -408,6 +411,7 @@ def main() -> None:
                 "streaming_latency_sec": streaming_total,
                 "sf": sf,
                 "cpus": cpus,
+                "nproc": nproc,
                 "n_bench_images": N_BENCH_IMAGES,
                 "n_assigned": n_assigned,
             }

@@ -42,6 +42,13 @@ state and nothing else:
   batch and the replay must find the previous snapshot to resume from
   (steady state keeps two snapshots on disk).
 
+Each batch decodes its input once (the feature frame is persisted for
+the batch) and, with pruning engaged, probes the bloom snapshot once:
+the batch's rep keys and band keys go through one ``_probe_flags``
+call, and the hit ``(key kind, shard)`` pairs become shard-pruned lazy
+reads of ``reps``/``bands`` that incremental_caption_run joins like
+the full indexes.
+
 The state dir and the stream checkpoint dir form one unit — restarting
 with a fresh checkpoint against an existing state dir (or vice versa)
 breaks the epoch alignment this protocol relies on.
@@ -136,6 +143,13 @@ def _tree_bytes(dirs: list[str]) -> int:
     return total
 
 
+def _check_n_shards(n_shards: int) -> None:
+    if not (0 < n_shards <= 256 and n_shards & (n_shards - 1) == 0):
+        raise ValueError(
+            f"n_shards must be a power of two <= 256, got {n_shards}"
+        )
+
+
 def _shard_of(key, n_shards: int = STATE_SHARDS):
     """Bloom shard of a key column as a pure JVM expression: the
     bloom's h1 is the little-endian int64 of the md5 digest, so
@@ -143,7 +157,7 @@ def _shard_of(key, n_shards: int = STATE_SHARDS):
     two hex chars of md5(key). Byte-equal to bloom_dedup._keyed's
     pandas hashing (pinned by test_jvm_shard_expression_matches_bloom_
     hashing); only power-of-two counts <= 256 are supported here."""
-    assert n_shards <= 256 and (n_shards & (n_shards - 1)) == 0
+    _check_n_shards(n_shards)
     return (
         F.conv(F.substring(F.md5(key), 1, 2), 16, 10).cast("int")
         % F.lit(n_shards)
@@ -158,28 +172,99 @@ def _band_key(band, key):
     return F.concat_ws(":", F.lit("b"), band, key)
 
 
-def _hit_shards_for(probes: DataFrame, blooms_df: DataFrame,
-                    n_shards: int, bits_per_shard: int,
-                    k_hashes: int) -> list[int]:
-    """Bloom-probe a one-column ``key`` frame, return the shards that
-    saw at least one hit (empty = nothing probed can be in the index,
-    bloom false negatives being impossible)."""
+def _probe_hits(feats: DataFrame, blooms_df: DataFrame, n_shards: int,
+                bits_per_shard: int, k_hashes: int) -> dict[str, list[int]]:
+    """ONE bloom probe per batch: the batch's rep keys (``s:<sha>``) and
+    all of its band keys (``b:<band>:<key>``) -> {key kind ("s"/"b"):
+    shards with at least one hit}. A kind with no entry has no hit, so
+    none of its keys can be in the index (blooms have no false
+    negatives). The band keys are a superset of the new reps' keys the
+    run consults; the run's joins filter the extra rows."""
     from ..operators.bloom_dedup import _probe_flags
 
+    f = feats.filter(
+        F.col("caption_sha").isNotNull() & F.col("bands").isNotNull()
+    )
+    probes = f.select(_rep_key(F.col("caption_sha")).alias("key")).union(
+        f.select(F.posexplode("bands").alias("band", "key")).select(
+            _band_key(F.col("band"), F.col("key")).alias("key")
+        )
+    )
     flags = _probe_flags(
         probes, blooms_df, "key", n_shards, bits_per_shard, k_hashes,
         validate=False,
-    ).persist()
-    try:
-        return [
-            r.shard
-            for r in flags.filter("might_contain")
-            .select("shard")
-            .distinct()
-            .collect()
-        ]
-    finally:
-        flags.unpersist()
+    )
+    hits: dict[str, list[int]] = {}
+    for r in (
+        flags.filter("might_contain")
+        .select(F.substring("key", 1, 1).alias("kind"), "shard")
+        .distinct()
+        .collect()
+    ):
+        hits.setdefault(r.kind, []).append(r.shard)
+    return hits
+
+
+def _index_read(s: SparkSession, schema: str, dirs: list[str],
+                hits: dict[str, list[int]] | None,
+                kind: str) -> DataFrame | None:
+    """Lazy read of an index store's committed epochs (None before its
+    first epoch). With ``hits`` None the whole store is read; given a
+    batch's probe ``hits``, only the row groups of the ``kind`` keys'
+    hit shards are, and a kind with no hit reads nothing. Epochs without the shard column read as NULL shard
+    and are never pruned."""
+    if not dirs:
+        return None
+    if hits is None:
+        return s.read.schema(schema).parquet(*dirs)
+    if not hits.get(kind):
+        return s.createDataFrame([], schema)
+    return (
+        s.read.schema(f"{schema}, {_STATE_SHARD} int")
+        .parquet(*dirs)
+        .filter(
+            F.col(_STATE_SHARD).isin(hits[kind])
+            | F.col(_STATE_SHARD).isNull()
+        )
+        .drop(_STATE_SHARD)
+    )
+
+
+def _state_for(s: SparkSession, cache: dict, state_dir: str,
+               batch_id: int):
+    """-> (caption dirs, reps dirs, bands dirs, bloom snapshot frame,
+    snapshot path, index bytes) for ``batch_id``: committed epochs
+    strictly below it. Served from ``cache`` when the previous batch
+    left it for exactly this batch id (the stores are append-only below
+    the current epoch within a run); a miss (first batch, replay,
+    restart) re-lists from disk and unpersists the snapshot frame the
+    cache held, which would otherwise stay in executor storage until
+    the session ends."""
+    if cache.get("next") == batch_id:
+        return (
+            cache["cap"], cache["reps"], cache["bands"],
+            cache["blooms_df"], cache["bloom_snap"],
+            cache["state_bytes"],
+        )
+    if cache.get("blooms_df") is not None:
+        cache["blooms_df"].unpersist()
+    cap, reps_dirs, bands_dirs = (
+        [p for _, p in _committed_epochs(os.path.join(state_dir, sub),
+                                         batch_id)]
+        for sub in ("captions", "reps", "bands")
+    )
+    snaps = _committed_epochs(os.path.join(state_dir, "blooms"), batch_id)
+    snap = snaps[-1][1] if snaps else None
+    blooms_df = (
+        s.read.schema(BLOOMS_SCHEMA).parquet(snap).persist()
+        if snap is not None
+        else None
+    )
+    cache["blooms_df"] = blooms_df
+    return (
+        cap, reps_dirs, bands_dirs, blooms_df, snap,
+        _tree_bytes(reps_dirs + bands_dirs),
+    )
 
 
 def write_row_epoch(path: str, row: dict) -> None:
@@ -392,14 +477,17 @@ def stream_near_dup_clusters(
 ):
     """Start the streaming near-dup clustering query.
 
+    ``n_shards`` must be a power of two <= 256 (ValueError here, before
+    any batch runs).
+
     ``prune_state``: None (default) engages bloom-probed, shard-pruned
     reads of the rep and band index stores once they exceed
     ``prune_min_state_bytes`` on disk; True forces it, False forces
     full-frame state reads (the pre-pruning behavior, kept for parity
-    testing). When engaged, a batch consults the rep index only for
-    its own caption shas' bloom-hit shards and the band index only for
-    the new reps' band keys' hit shards — a batch of entirely novel
-    captions reads ZERO index rows. The bloom snapshot
+    testing). When engaged, each batch makes ONE bloom probe up front,
+    over its caption shas' rep keys and all of its band keys, and reads
+    each index only in its kind's hit shards — a batch of entirely
+    novel captions reads ZERO index rows. The bloom snapshot
     (``blooms/epoch=N``, latest prior retained as replay insurance) is
     built lazily at first engagement from the stores themselves (sha
     and band keys ARE the stores' own columns — no separate key store
@@ -409,87 +497,15 @@ def stream_near_dup_clusters(
     current assignments with ``load_assignments(spark, state_dir)`` —
     NOT the bare root path: pruning retains the latest prior snapshot as
     replay insurance, so two epochs coexist on disk."""
+    _check_n_shards(n_shards)
     captions_path = os.path.join(state_dir, "captions")
     reps_path = os.path.join(state_dir, "reps")
     bands_path = os.path.join(state_dir, "bands")
     assign_path = os.path.join(state_dir, "assign")
     blooms_path = os.path.join(state_dir, "blooms")
     # cross-batch cache of committed-epoch listings + the loaded bloom
-    # snapshot (append-only below the current epoch within a run; a
-    # replay/restart misses the cache and re-lists from disk)
+    # snapshot (see _state_for)
     cache: dict = {"next": None}
-
-    def _state_for(s: SparkSession, batch_id: int):
-        if cache.get("next") == batch_id:
-            return (
-                cache["cap"], cache["reps"], cache["bands"],
-                cache["blooms_df"], cache["bloom_snap"],
-                cache["state_bytes"],
-            )
-        cap = [p for _, p in _committed_epochs(captions_path, batch_id)]
-        reps_dirs = [
-            p for _, p in _committed_epochs(reps_path, batch_id)
-        ]
-        bands_dirs = [
-            p for _, p in _committed_epochs(bands_path, batch_id)
-        ]
-        snaps = _committed_epochs(blooms_path, batch_id)
-        snap = snaps[-1][1] if snaps else None
-        blooms_df = (
-            s.read.schema(BLOOMS_SCHEMA).parquet(snap).persist()
-            if snap is not None
-            else None
-        )
-        return (
-            cap, reps_dirs, bands_dirs, blooms_df, snap,
-            _tree_bytes(reps_dirs + bands_dirs),
-        )
-
-    def _reps_resolver(s, reps_dirs, blooms_df):
-        def resolve(shas: DataFrame) -> DataFrame:
-            probes = (
-                shas.filter(F.col("caption_sha").isNotNull())
-                .select(_rep_key(F.col("caption_sha")).alias("key"))
-                .distinct()
-            )
-            hit = _hit_shards_for(
-                probes, blooms_df, n_shards, bits_per_shard, k_hashes
-            )
-            if not hit:
-                return s.createDataFrame([], REPS_SCHEMA)
-            return (
-                s.read.schema(f"{REPS_SCHEMA}, {_STATE_SHARD} int")
-                .parquet(*reps_dirs)
-                .filter(
-                    F.col(_STATE_SHARD).isin(hit)
-                    | F.col(_STATE_SHARD).isNull()
-                )
-                .select("caption_sha", "rep")
-            )
-
-        return resolve
-
-    def _bands_resolver(s, bands_dirs, blooms_df):
-        def resolve(keys: DataFrame) -> DataFrame:
-            probes = keys.select(
-                _band_key(F.col("band"), F.col("key")).alias("key")
-            ).distinct()
-            hit = _hit_shards_for(
-                probes, blooms_df, n_shards, bits_per_shard, k_hashes
-            )
-            if not hit:
-                return s.createDataFrame([], BANDS_SCHEMA)
-            return (
-                s.read.schema(f"{BANDS_SCHEMA}, {_STATE_SHARD} int")
-                .parquet(*bands_dirs)
-                .filter(
-                    F.col(_STATE_SHARD).isin(hit)
-                    | F.col(_STATE_SHARD).isNull()
-                )
-                .select("id", "band", "key")
-            )
-
-        return resolve
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.bloom_dedup import bloom_merge, bloom_shards
@@ -497,7 +513,7 @@ def stream_near_dup_clusters(
         s = batch_df.sparkSession
         epoch = f"epoch={batch_id}"
         (cap_prior, reps_dirs, bands_dirs, blooms_df, bloom_snap,
-         state_bytes) = _state_for(s, batch_id)
+         state_bytes) = _state_for(s, cache, state_dir, batch_id)
         use_prune = (
             prune_state
             if prune_state is not None
@@ -521,58 +537,54 @@ def stream_near_dup_clusters(
         # one — fetched per candidate endpoint through the pruned
         # resolver, never as a corpus-wide join
         caption_dirs = cap_prior + [os.path.join(captions_path, epoch)]
-        reps = (
-            s.read.schema(REPS_SCHEMA).parquet(*reps_dirs)
-            if reps_dirs
-            else None
-        )
-        bands = (
-            s.read.schema(BANDS_SCHEMA).parquet(*bands_dirs)
-            if bands_dirs
-            else None
-        )
         assign_epochs = _committed_epochs(assign_path, batch_id)
         assign = (
             s.read.schema(ASSIGN_SCHEMA).parquet(assign_epochs[-1][1])
             if assign_epochs
             else None
         )
-        # each state component stands on its own: gating the whole dict on
-        # one component would throw away a loadable reps/bands index when
-        # another is missing (e.g. a snapshot dir lost to storage issues)
-        # and re-emit duplicate first-seen reps
-        state = (
-            dict(reps=reps, bands=bands, assign=assign)
-            if any(x is not None for x in (reps, bands, assign))
-            else None
-        )
-        # index-pruned state reads only when engaged AND a snapshot
-        # exists (first engagement on a legacy store full-scans once
-        # while the snapshot is built below); the full frames above
-        # stay LAZY — nothing executes them when the resolvers serve
-        pruned = use_prune and blooms_df is not None
-        out = incremental_caption_run(
-            extract_features(batch_df),
-            None,
-            state,
-            bucket_cap=bucket_cap,
-            jaccard_threshold=jaccard_threshold,
-            captions_resolver=pruned_caption_resolver(s, caption_dirs),
-            reps_resolver=(
-                _reps_resolver(s, reps_dirs, blooms_df)
-                if pruned and reps_dirs
+        # one decode per batch: the probe, the rep groups and the star
+        # edges all read the features
+        feats = extract_features(batch_df).persist()
+        try:
+            # index-pruned state reads only when engaged AND a snapshot
+            # exists (first engagement on a legacy store full-scans once
+            # while the snapshot is built below)
+            hits = (
+                _probe_hits(
+                    feats, blooms_df, n_shards, bits_per_shard, k_hashes
+                )
+                if use_prune and blooms_df is not None
                 else None
-            ),
-            bands_resolver=(
-                _bands_resolver(s, bands_dirs, blooms_df)
-                if pruned and bands_dirs
+            )
+            reps = _index_read(s, REPS_SCHEMA, reps_dirs, hits, "s")
+            bands = _index_read(s, BANDS_SCHEMA, bands_dirs, hits, "b")
+            # each state component stands on its own: gating the whole
+            # dict on one component would throw away a loadable
+            # reps/bands index when another is missing (e.g. a snapshot
+            # dir lost to storage issues) and re-emit duplicate
+            # first-seen reps
+            state = (
+                dict(reps=reps, bands=bands, assign=assign)
+                if any(x is not None for x in (reps, bands, assign))
                 else None
-            ),
-        )
+            )
+            out = incremental_caption_run(
+                feats,
+                None,
+                state,
+                bucket_cap=bucket_cap,
+                jaccard_threshold=jaccard_threshold,
+                captions_resolver=pruned_caption_resolver(s, caption_dirs),
+            )
+        finally:
+            feats.unpersist()
         # outputs are localCheckpoint-materialized inside the run, so the
         # writes below cannot invalidate what they were computed from;
         # rep/band deltas are written key-shard-clustered so the pruned
         # reads above serve future batches with row-group pruning
+        new_reps_dir = os.path.join(reps_path, epoch)
+        new_bands_dir = os.path.join(bands_path, epoch)
         (
             out["new_reps"]
             .withColumn(
@@ -582,7 +594,7 @@ def stream_near_dup_clusters(
             .repartition(_STATE_SHARD)
             .sortWithinPartitions(_STATE_SHARD)
             .write.mode("overwrite")
-            .parquet(os.path.join(reps_path, epoch))
+            .parquet(new_reps_dir)
         )
         (
             out["new_bands"]
@@ -595,7 +607,7 @@ def stream_near_dup_clusters(
             .repartition(_STATE_SHARD)
             .sortWithinPartitions(_STATE_SHARD)
             .write.mode("overwrite")
-            .parquet(os.path.join(bands_path, epoch))
+            .parquet(new_bands_dir)
         )
         out["assign"].write.mode("overwrite").parquet(
             os.path.join(assign_path, epoch)
@@ -605,41 +617,24 @@ def stream_near_dup_clusters(
         # stale snapshot would hide index rows from future probes)
         new_snap, new_blooms_df = bloom_snap, blooms_df
         if use_prune or blooms_df is not None:
-            rep_delta_keys = (
+            # first engagement: the stores' own columns ARE the keys —
+            # one pass over reps+bands (this epoch included); after that,
+            # only this epoch's deltas
+            fresh = blooms_df is None
+            rep_keys = (
                 s.read.schema(REPS_SCHEMA)
-                .parquet(os.path.join(reps_path, epoch))
+                .parquet(*(reps_dirs if fresh else []), new_reps_dir)
                 .select(_rep_key(F.col("caption_sha")).alias("key"))
             )
-            band_delta_keys = (
+            band_keys = (
                 s.read.schema(BANDS_SCHEMA)
-                .parquet(os.path.join(bands_path, epoch))
+                .parquet(*(bands_dirs if fresh else []), new_bands_dir)
                 .select(
                     _band_key(F.col("band"), F.col("key")).alias("key")
                 )
             )
-            if blooms_df is None:
-                # first engagement: the stores' own columns ARE the
-                # keys — one pass over reps+bands (this epoch included)
-                rep_delta_keys = (
-                    s.read.schema(REPS_SCHEMA)
-                    .parquet(
-                        *(reps_dirs + [os.path.join(reps_path, epoch)])
-                    )
-                    .select(_rep_key(F.col("caption_sha")).alias("key"))
-                )
-                band_delta_keys = (
-                    s.read.schema(BANDS_SCHEMA)
-                    .parquet(
-                        *(bands_dirs + [os.path.join(bands_path, epoch)])
-                    )
-                    .select(
-                        _band_key(F.col("band"), F.col("key")).alias(
-                            "key"
-                        )
-                    )
-                )
             delta = bloom_shards(
-                rep_delta_keys.unionByName(band_delta_keys).distinct(),
+                rep_keys.unionByName(band_keys).distinct(),
                 "key",
                 n_shards=n_shards,
                 bits_per_shard=bits_per_shard,
@@ -671,8 +666,6 @@ def stream_near_dup_clusters(
         # assignment). Steady state keeps exactly two snapshots.
         for _, p in assign_epochs[:-1]:
             shutil.rmtree(p, ignore_errors=True)
-        new_reps_dir = os.path.join(reps_path, epoch)
-        new_bands_dir = os.path.join(bands_path, epoch)
         cache.update(
             next=batch_id + 1,
             cap=caption_dirs,

@@ -297,3 +297,112 @@ def test_pruned_state_novel_batch_reads_zero_index_rows(
     assert _assign_dict(load_assignments(spark, state)) == _assign_dict(
         load_assignments(spark, state2)
     )
+
+
+def test_n_shards_not_power_of_two_raises_at_start(spark, tmp_path):
+    """An unsupported shard count is refused when the stream starts,
+    before any batch runs, instead of killing the query mid-batch."""
+    import pytest
+
+    inp = str(tmp_path / "in")
+    os.makedirs(inp, exist_ok=True)
+    ck = str(tmp_path / "ck")
+    with pytest.raises(ValueError, match="power of two"):
+        stream_near_dup_clusters(
+            spark, inp, str(tmp_path / "state"), ck, n_shards=48
+        )
+    assert not spark.streams.active
+    assert not os.path.exists(ck)
+
+
+def test_state_cache_miss_unpersists_replaced_blooms(spark, tiny_corpus,
+                                                     tmp_path):
+    """A replay misses the cross-batch cache: the bloom snapshot frame
+    the cache held is unpersisted, the prior snapshot is loaded."""
+    from pyspark import StorageLevel
+
+    from ordinarydumpdeduplicator_spark.streaming.near_dup import (
+        BLOOMS_SCHEMA,
+        _state_for,
+    )
+
+    pdf, _ = tiny_corpus
+    inp = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inp, exist_ok=True)
+    for lo, hi in ((0, 120), (120, 160)):
+        to_spark_images(spark, pdf.iloc[lo:hi]).coalesce(1).write.mode(
+            "append"
+        ).parquet(inp)
+        stream_near_dup_clusters(
+            spark, inp, state, ck, prune_state=True
+        ).awaitTermination()
+
+    # what the cache holds after batch 1: its own snapshot, for batch 2
+    held = (
+        spark.read.schema(BLOOMS_SCHEMA)
+        .parquet(os.path.join(state, "blooms", "epoch=1"))
+        .persist()
+    )
+    held.count()
+    cache = {"next": 2, "blooms_df": held}
+    # batch 1 replays
+    _, reps, bands, blooms_df, snap, _ = _state_for(spark, cache, state, 1)
+    try:
+        assert held.storageLevel == StorageLevel.NONE
+        assert snap == os.path.join(state, "blooms", "epoch=0")
+        assert blooms_df.storageLevel != StorageLevel.NONE
+        assert cache["blooms_df"] is blooms_df
+        assert reps == [os.path.join(state, "reps", "epoch=0")]
+        assert bands == [os.path.join(state, "bands", "epoch=0")]
+    finally:
+        blooms_df.unpersist()
+
+
+def test_batch_decodes_input_once(spark, tiny_corpus, tmp_path):
+    """A wave of N rows is read twice per batch: once for the captions
+    write and once for the one feature pass that the probe, the rep
+    groups and the star edges share."""
+    pdf, _ = tiny_corpus
+    inp = str(tmp_path / "in")
+    os.makedirs(inp, exist_ok=True)
+    n = 120
+    to_spark_images(spark, pdf.iloc[:n]).coalesce(1).write.mode(
+        "append"
+    ).parquet(inp)
+    q = stream_near_dup_clusters(
+        spark, inp, str(tmp_path / "state"), str(tmp_path / "ck")
+    )
+    q.awaitTermination()
+    assert q.lastProgress["numInputRows"] == 2 * n
+
+
+def test_pruned_batch_probes_blooms_once(spark, tiny_corpus, tmp_path,
+                                         monkeypatch):
+    """With pruning engaged, a batch's rep and band keys go through ONE
+    bloom probe; the first batch has no snapshot yet and probes none."""
+    from ordinarydumpdeduplicator_spark.operators import bloom_dedup
+
+    calls = []
+    real = bloom_dedup._probe_flags
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(bloom_dedup, "_probe_flags", counting)
+    pdf, _ = tiny_corpus
+    inp = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inp, exist_ok=True)
+    for lo, hi, probes in ((0, 120, 0), (120, 160, 1), (160, 200, 1)):
+        to_spark_images(spark, pdf.iloc[lo:hi]).coalesce(1).write.mode(
+            "append"
+        ).parquet(inp)
+        calls.clear()
+        stream_near_dup_clusters(
+            spark, inp, state, ck, prune_state=True
+        ).awaitTermination()
+        assert len(calls) == probes, (lo, hi, calls)
